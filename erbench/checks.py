@@ -70,16 +70,6 @@ def pinned(workload: str, seed: int) -> dict | None:
         return json.load(f).get(workload, {}).get(str(seed))
 
 
-def record_pin(workload: str, seed: int, digests: dict) -> None:
-    """Store a seed's digests (run with ``--pin`` on a commit known good)."""
-    with open(DIGESTS_PATH) as f:
-        table = json.load(f)
-    table.setdefault(workload, {}).setdefault(str(seed), {}).update(digests)
-    with open(DIGESTS_PATH, "w") as f:
-        json.dump(table, f, indent=1, sort_keys=True)
-        f.write("\n")
-
-
 def er_failures(out: dict, shape: dict, pin: dict | None) -> list[str]:
     bad = []
     if out["mention_edges"] != out["mention_edge_pairs"]:

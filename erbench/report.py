@@ -1,7 +1,8 @@
 """Run one workload (timed or traced) and turn it into the result line.
 
 The per-layer metric names come from ``per_layer_names()``; BENCHMARK.json
-lists the same names. A layer a workload does not exercise reports 0.
+lists the same names. Every traced run exercises every layer; a metric the
+run could not measure fails the run.
 """
 
 from __future__ import annotations
@@ -9,8 +10,8 @@ from __future__ import annotations
 import os
 import statistics
 
-from checks import pinned, record_pin
-from tracing import Span, Tracer, attribute_event_log, event_log_file, wrapped_methods
+from checks import pinned
+from tracing import LayerTasks, Span, Tracer, attribute_event_log, event_log_file, wrapped_methods
 
 COMPUTE_LAYERS = (
     "conversations",
@@ -77,31 +78,29 @@ def per_layer_names() -> list[tuple[str, str, str]]:
 # ---------------------------------------------------------------------------
 
 
-def run_workload(W, spark, wl, args, tmp: str, session_s: float) -> dict:
-    """Generate the input, then warm up with one resolution of it (the last
-    step of set-up). Timed: resolve the input repeatedly for ``--seconds``.
-    Traced: one timed resolution, then the staged layer-by-layer
-    resolution, then (on the workload that carries them) the durable and
-    day-2 attach passes.
-
-    ``setup_s`` is process start to a warm session: imports, JVM and
-    session start, and the warm-up resolution; input generation (the
-    benchmark's own work) is left out."""
-    pin = None if args.pin else pinned(args.workload, args.seed)
+def run_workload(W, spark, wl, args, tmp: str, setup: list[float]) -> dict:
+    """Generate the input and resolve it once untimed (the first full-size
+    resolution in a JVM runs slower; it is checked and counted, not timed).
+    Timed: resolve the input repeatedly for ``--seconds``. Traced: one
+    resolution through the pipeline, then the staged layer-by-layer
+    resolution, the durable fresh and resumed resolutions, and the day-2
+    attach stream."""
+    pin = pinned(args.workload, args.seed)
     transcripts = W.write_transcripts(spark, wl, args.seed, os.path.join(tmp, "transcripts"))
-    warm = W.run_er(spark, transcripts, 0, pin)
-    setup_s = session_s + warm["op_s"][0]
-    W.log(f"setup {setup_s:.3f}s (session {session_s:.2f}s)")
+    W.log("input written")
+    first = W.run_er(spark, transcripts, 0, pin)
     timed = W.run_er(spark, transcripts, 0 if args.trace else args.seconds, pin)
-    timed["attempted"] += warm["attempted"]
-    timed["failures"] += warm["failures"]
-    run = {"er": timed, "shape": None, "outputs": None, "trace_failures": [], "setup_s": setup_s}
+    timed["attempted"] += first["attempted"]
+    timed["failures"] += first["failures"]
+    run = {"er": timed, "first_s": first["op_s"][0], "setup": setup, "shape": None, "outputs": None,
+           "trace_failures": []}
     if timed["last"] is not None:
         run["outputs"] = timed["last"][1]
     if not args.trace:
         if timed["last"] is not None:
             r, out = timed["last"]
-            run["shape"] = W.shape_of(wl, r.conversations.count(), None, None, out)
+            run["shape"] = W.shape_of(wl, r.conversations.count(), *W.count_blocking(r.vertices), out)
+            W.log("input shape counted")
         return run
 
     from neuronews_spark.pipeline import PipelineConfig
@@ -120,29 +119,27 @@ def run_workload(W, spark, wl, args, tmp: str, session_s: float) -> dict:
         wl, rows["conversations"], rows["blocking"], staged["extra"]["capped_blocks"], staged["out"]
     )
 
-    if wl.traced_durable:
-        durable = W.resolve_durable(spark, tracer, transcripts, os.path.join(tmp, "workdir"))
-        for leg, res in durable.items():
-            run["trace_attempted"] += 1
-            if _digests(res["out"]) != _digests(staged["out"]):
-                failures.append(f"durable {leg} resolution differs from the pipeline's")
-        run["durable"] = {leg: res["wall"] for leg, res in durable.items()}
-        W.log(f"durable: {run['durable']}, lineage {tracer.wall('lineage'):.2f}s, "
-              f"checkpoint {tracer.wall('checkpoint'):.2f}s")
+    durable = W.resolve_durable(spark, tracer, transcripts, os.path.join(tmp, "workdir"))
+    for leg, res in durable.items():
+        run["trace_attempted"] += 1
+        if _digests(res["out"]) != _digests(staged["out"]):
+            failures.append(f"durable {leg} resolution differs from the pipeline's")
+    run["durable"] = {leg: res["wall"] for leg, res in durable.items()}
+    W.log(f"durable: {run['durable']}, lineage {tracer.wall('lineage'):.2f}s, "
+          f"checkpoint {tracer.wall('checkpoint'):.2f}s")
 
-    if wl.traced_attach:
-        prep = W.prepare_attach(spark, staged["mentions"], args.seed, tmp)
-        with wrapped_methods(tracer, ParquetCatalog, ("merge_upsert",), "tables.merge", tag_jobs=False):
-            att = W.run_attach(spark, prep, tmp, pin)
-        # A micro-batch runs on the stream's own thread: its interval is the
-        # incremental_er span, and the jobs inside a merge go to tables.merge.
-        for start, end in att["batch_spans"]:
-            tracer.spans.append(Span("incremental_er", None, start, end, end - start))
-        run["trace_attempted"] += att["attempted"]
-        failures += att["batch_failures"] + att["run_failures"]
-        run["attach"] = att
-        run["attach_shape"] = prep["shape"]
-        W.log(f"attach: increments {[round(x, 3) for x in att['lat']]}")
+    prep = W.prepare_attach(spark, staged["mentions"], args.seed, tmp)
+    with wrapped_methods(tracer, ParquetCatalog, ("merge_upsert",), "tables.merge", tag_jobs=False):
+        att = W.run_attach(spark, prep, tmp, pin)
+    # A micro-batch runs on the stream's own thread: its interval is the
+    # incremental_er span, and the jobs inside a merge go to tables.merge.
+    for start, end in att["batch_spans"]:
+        tracer.spans.append(Span("incremental_er", None, start, end, end - start))
+    run["trace_attempted"] += att["attempted"]
+    failures += att["batch_failures"] + att["run_failures"]
+    run["attach"] = att
+    run["attach_shape"] = prep["shape"]
+    W.log(f"attach: increments {[round(x, 3) for x in att['lat']]}")
     return run
 
 
@@ -166,42 +163,38 @@ def tail(xs: list[float]) -> dict:
 
 
 def finish(W, wl, args, run: dict, nproc: int, tmp: str) -> tuple[dict, dict]:
-    setup_s = run["setup_s"]
+    setup_s = statistics.median(run["setup"])
     er = run["er"]
     walls = er["walls"]
-    attempted = er["attempted"] + run.get("trace_attempted", 0)
-    failed = len(er["failures"]) + len(run["trace_failures"])
+    failures = er["failures"] + run["trace_failures"]
     record = {
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
         "trace": args.trace, "shape": run["shape"], "outputs": run["outputs"],
-        "failures": er["failures"] + run["trace_failures"],
+        "setup_s": run["setup"], "first_resolution_s": run["first_s"],
         "resolution_s": walls, "resolution_cpu_s": er["cpus"], "resolution_tail": tail(walls),
-        "error_rate": failed / attempted,
     }
     if args.trace:
-        metrics, extra = traced_metrics(W, run, setup_s, nproc, tmp)
+        metrics, extra, unmeasured = traced_metrics(W, run, setup_s, nproc, tmp)
+        failures += unmeasured
         record.update(extra)
     else:
-        turns_per_s = wl.n_turns / statistics.median(walls) if walls else 0.0
         metrics = {
-            "turns_per_s": {"value": turns_per_s, "unit": "turns/s"},
-            "resolution_cpu_s": {"value": statistics.median(er["cpus"]) if walls else 0.0, "unit": "s"},
+            "turns_per_s": {"value": wl.n_turns / statistics.median(walls) if walls else 0.0, "unit": "turns/s"},
             "setup_s": {"value": setup_s, "unit": "s"},
         }
         record["peak_rss_mb"] = run["rss"]
-    if args.pin and failed == 0 and run["outputs"]:
-        digests = {k: run["outputs"][k] for k in ("entities", "entities_hash", "id_map_hash")}
-        if "attach" in run:
-            digests["batch_hashes"] = run["attach"]["batch_hashes"]
-        record_pin(args.workload, args.seed, digests)
+    attempted = er["attempted"] + run.get("trace_attempted", 0)
+    failed = len(failures)
+    record["failures"] = failures
+    record["error_rate"] = failed / attempted
     result = {"correct": failed == 0, "attempted": int(attempted), "failed": int(failed), "metrics": metrics}
     return result, record
 
 
-def traced_metrics(W, run: dict, setup_s: float, nproc: int, tmp: str) -> tuple[dict, dict]:
+def traced_metrics(W, run: dict, setup_s: float, nproc: int, tmp: str) -> tuple[dict, dict, list[str]]:
+    """The per-layer metrics of a traced run, the record's extra fields,
+    and one message per metric that could not be measured."""
     tracer: Tracer = run["tracer"]
-    names = per_layer_names()
-    values = {name: 0.0 for name, _, _ in names}
     tasks = attribute_event_log(
         event_log_file(os.path.join(tmp, "eventlog")),
         tracer.spans,
@@ -210,55 +203,44 @@ def traced_metrics(W, run: dict, setup_s: float, nproc: int, tmp: str) -> tuple[
     walls = {layer: tracer.wall(layer) for layer in W.ER_LAYERS}
     staged = run["staged"]
     rows = dict(staged["rows"])
-    values["blocking.candidate_pairs"] = staged["rows"]["blocking"]
-    values["blocking.capped_blocks"] = staged["extra"]["capped_blocks"]
-    if staged["rows"]["blocking"]:
-        values["blocking.pair_yield"] = staged["rows"]["scoring"] / staged["rows"]["blocking"]
     staged_total = sum(walls.values())
-    plain = run["er"]["walls"]
-    if plain:
-        values["trace.overhead_frac"] = staged_total / plain[0] - 1.0
-    values["session.wall_s"] = setup_s
-    values["session.peak_rss_mb"] = run["rss"]
-    extra = {
-        "staged_total_s": staged_total,
-        "spans": [
-            {"layer": sp.layer, "parent": sp.parent, "start": sp.start, "wall_s": sp.wall}
-            for sp in sorted(tracer.spans, key=lambda sp: sp.start)
-        ],
+    att = run["attach"]
+    merge_s = tracer.wall("tables.merge")
+    add_batch = sum(p["durationMs"].get("addBatch", 0) for p in att["progress"]) / 1e3
+    trigger = sum(p["durationMs"].get("triggerExecution", 0) for p in att["progress"]) / 1e3
+    walls["incremental_er"] = max(0.0, add_batch - merge_s)
+    rows["incremental_er"] = sum(att["sizes"])
+    values = {
+        "blocking.candidate_pairs": rows["blocking"],
+        "blocking.capped_blocks": staged["extra"]["capped_blocks"],
+        "blocking.pair_yield": rows["scoring"] / rows["blocking"] if rows["blocking"] else 0.0,
+        "session.wall_s": setup_s,
+        "session.peak_rss_mb": run["rss"],
+        "durable.fresh_s": run["durable"]["fresh"],
+        "durable.resume_s": run["durable"]["resume"],
+        "tables.merge.wall_s": merge_s,
+        "tables.merge.calls": tracer.calls("tables.merge"),
+        "streaming.wall_s": max(0.0, trigger - add_batch),
+        "streaming.increment_p50_s": statistics.median(att["lat"]),
+        "streaming.mentions_per_s": sum(att["sizes"]) / att["loop_wall"],
     }
-
-    if "durable" in run:
-        values["durable.fresh_s"] = run["durable"]["fresh"]
-        values["durable.resume_s"] = run["durable"]["resume"]
-        for layer in ("lineage", "checkpoint"):
-            values[f"{layer}.wall_s"] = tracer.wall(layer)
-            values[f"{layer}.calls"] = tracer.calls(layer)
-            values[f"{layer}.bytes_written"] = tracer.counters.get(f"{layer}.bytes_written", 0.0)
-        extra["lineage_plus_checkpoint_s"] = values["lineage.wall_s"] + values["checkpoint.wall_s"]
-        extra["largest_compute_layer_s"] = max(walls.values())
-    if "attach" in run:
-        att = run["attach"]
-        merge_s = tracer.wall("tables.merge")
-        add_batch = sum(p["durationMs"].get("addBatch", 0) for p in att["progress"]) / 1e3
-        trigger = sum(p["durationMs"].get("triggerExecution", 0) for p in att["progress"]) / 1e3
-        walls["incremental_er"] = max(0.0, add_batch - merge_s)
-        rows["incremental_er"] = sum(att["sizes"])
-        values["tables.merge.wall_s"] = merge_s
-        values["tables.merge.calls"] = tracer.calls("tables.merge")
-        values["streaming.wall_s"] = max(0.0, trigger - add_batch)
-        values["streaming.increment_p50_s"] = statistics.median(att["lat"])
-        values["streaming.mentions_per_s"] = sum(att["sizes"]) / att["loop_wall"]
-        extra.update(attach_shape=run["attach_shape"], match_kinds=att["kinds"],
-                     batch_hashes=att["batch_hashes"], increment_tail=tail(att["lat"]))
-
+    for layer in ("lineage", "checkpoint"):
+        values[f"{layer}.wall_s"] = tracer.wall(layer)
+        values[f"{layer}.calls"] = tracer.calls(layer)
+        values[f"{layer}.bytes_written"] = tracer.counters[f"{layer}.bytes_written"]
+    unmeasured = []
+    plain = run["er"]["walls"]
+    if not plain:  # reported as 0, and the run fails
+        unmeasured.append("no pipeline resolution passed its checks: trace.overhead_frac")
+    values["trace.overhead_frac"] = staged_total / plain[0] - 1.0 if plain else 0.0
     for layer in COMPUTE_LAYERS:
-        wall = walls.get(layer, 0.0)
+        wall = walls[layer]
         values[f"{layer}.wall_s"] = wall
-        values[f"{layer}.rows_out"] = rows.get(layer, 0)
+        values[f"{layer}.rows_out"] = rows[layer]
         t = tasks.get(layer)
-        if t is None:
-            continue
+        if t is None:  # reported as 0, and the run fails
+            unmeasured.append(f"no Spark tasks attributed to {layer}")
+            t = LayerTasks()
         values[f"{layer}.task_cpu_s"] = t.cpu_s
         values[f"{layer}.gc_s"] = t.gc_s
         values[f"{layer}.slot_util"] = t.run_s / (wall * nproc) if wall else 0.0
@@ -266,13 +248,24 @@ def traced_metrics(W, run: dict, setup_s: float, nproc: int, tmp: str) -> tuple[
         values[f"{layer}.shuffle_write_mb"] = t.shuffle_write_mb
         values[f"{layer}.spill_mb"] = t.spill_mb
         values[f"{layer}.spark_jobs"] = t.jobs
-        if f"{layer}.python_s" in values:
+        if EXTRA.get(layer) == PYTHON_METRICS:
             values[f"{layer}.python_s"] = t.python_s
             values[f"{layer}.python_sent_mb"] = t.python_sent_mb
     compute = sum(walls[l] for l in W.ER_LAYERS)
-    extra["span_share"] = {
-        "mention_layers": sum(walls[l] for l in MENTION_LAYERS) / compute,
-        "pair_layers": sum(walls[l] for l in PAIR_LAYERS) / compute,
+    extra = {
+        "staged_total_s": staged_total,
+        "span_share": {
+            "mention_layers": sum(walls[l] for l in MENTION_LAYERS) / compute,
+            "pair_layers": sum(walls[l] for l in PAIR_LAYERS) / compute,
+        },
+        "lineage_plus_checkpoint_s": values["lineage.wall_s"] + values["checkpoint.wall_s"],
+        "largest_compute_layer_s": max(walls[l] for l in W.ER_LAYERS),
+        "attach_shape": run["attach_shape"], "match_kinds": att["kinds"],
+        "batch_hashes": att["batch_hashes"], "increment_tail": tail(att["lat"]),
+        "spans": [
+            {"layer": sp.layer, "parent": sp.parent, "start": sp.start, "wall_s": sp.wall}
+            for sp in sorted(tracer.spans, key=lambda sp: sp.start)
+        ],
     }
-    units = {name: unit for name, unit, _ in names}
-    return {k: {"value": float(v), "unit": units[k]} for k, v in values.items()}, extra
+    metrics = {name: {"value": float(values[name]), "unit": unit} for name, unit, _ in per_layer_names()}
+    return metrics, extra, unmeasured

@@ -1,6 +1,6 @@
 """Entity-resolution benchmark: one workload, one JVM, one JSON result.
 
-    python3 erbench/run.py --workload er_mentions --seed 1 --seconds 5 --trace 0
+    python3 erbench/run.py --workload er_mentions --seed 1 --seconds 25 --trace 0
 
 Run from the root of a checkout of the repository. The last line of
 standard output is the result; the line before it is a record of the
@@ -33,6 +33,8 @@ JIFFIES_AT_START = cpu_jiffies()
 ROOT = os.getcwd()
 HERE = os.path.dirname(os.path.abspath(__file__))
 DRIVER_MEM = "3g"
+SETUP_SAMPLES = 3  # set-ups per timed run (the traced run sets up once)
+WARM_ROWS = 1000
 
 
 def parse_args() -> argparse.Namespace:
@@ -41,10 +43,6 @@ def parse_args() -> argparse.Namespace:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument(
-        "--pin", action="store_true",
-        help="record this seed's output digests in digests.json instead of checking them",
-    )
     return ap.parse_args()
 
 
@@ -81,10 +79,40 @@ def start_session(tmp: str, trace: bool):
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": "file://" + os.path.join(tmp, "eventlog"),
             "spark.eventLog.compress": "false",
+            # one file, not the rolling directory Spark 4 writes by default
+            "spark.eventLog.rolling.enabled": "false",
         })
     spark = get_spark(app_name="erbench", extra_conf=conf)
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def warm_up(spark) -> None:
+    """The small warm-up that ends set-up: the first query of the session,
+    a sum over a few generated rows."""
+    spark.range(WARM_ROWS).selectExpr("sum(id)").collect()
+
+
+def start_setup_samples(tmp: str, n: int) -> list[subprocess.Popen]:
+    """Start ``n`` more set-ups, each in a separate process (setup_sample.py)
+    that starts, sets up the way this process does, prints its seconds and
+    exits. They run alongside this process's own set-up."""
+    return [
+        subprocess.Popen(
+            [sys.executable, os.path.join(HERE, "setup_sample.py"), os.path.join(tmp, f"setup{i}")],
+            cwd=ROOT, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        )
+        for i in range(n)
+    ]
+
+
+def finish_setup_sample(proc: subprocess.Popen) -> float:
+    """Wait for a set-up sample to exit; return its seconds."""
+    out, err = proc.communicate(timeout=150)
+    if proc.returncode != 0:
+        sys.stderr.write(err[-4000:])
+        raise RuntimeError(f"set-up sample exited with code {proc.returncode}")
+    return float(out.split()[-1])
 
 
 def jvm_peak_rss_mb(pid: int) -> float:
@@ -181,16 +209,30 @@ def main() -> int:
         print(f"erbench: unknown workload {args.workload!r}; known: {sorted(W.WORKLOADS)}", file=sys.stderr)
         return 2
     spark = None
+    # set-up: process start to a warm session. A timed run makes
+    # SETUP_SAMPLES set-ups at once, this process's and the samples'; three
+    # one after another would cost a third of the run's time budget.
+    samples = [] if args.trace else start_setup_samples(tmp, SETUP_SAMPLES - 1)
     try:
         spark = start_session(tmp, trace=bool(args.trace))
-        session_s = time.perf_counter() - T_PROCESS
+        warm_up(spark)
+        setup = [time.perf_counter() - T_PROCESS]
+        setup += [finish_setup_sample(p) for p in samples]
+        W.log("setup " + ", ".join(f"{x:.2f}s" for x in setup))
         host = host_record(spark, nproc)
-        run = report.run_workload(W, spark, wl, args, tmp, session_s)
+        run = report.run_workload(W, spark, wl, args, tmp, setup)
         run["rss"] = jvm_peak_rss_mb(W.jvm_pid(spark))
         stop_session(spark)
         spark = None
+        W.log("session stopped")
         result, record = report.finish(W, wl, args, run, nproc, tmp)
     finally:
+        for p in samples:  # a sample stops its own JVM before it exits
+            try:
+                p.communicate(timeout=150)
+            except subprocess.TimeoutExpired:
+                p.kill()
+                p.communicate()
         if spark is not None:
             stop_session(spark)
         shutil.rmtree(tmp, ignore_errors=True)

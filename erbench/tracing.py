@@ -172,62 +172,47 @@ def attribute_event_log(path: str, spans: list[Span], layers: set[str]) -> dict[
     """
     out: dict[str, LayerTasks] = defaultdict(LayerTasks)
     stage_layer: dict[int, str] = {}
-    for line in _event_lines(path):
-        ev = json.loads(line)
-        kind = ev.get("Event")
-        if kind == "SparkListenerJobStart":
-            group = (ev.get("Properties") or {}).get("spark.jobGroup.id")
-            layer = group if group in layers else _innermost(
-                spans, ev.get("Submission Time", 0) / 1000.0
-            )
-            if layer is None:
-                continue
-            out[layer].jobs += 1
-            for sid in ev.get("Stage IDs", []):
-                stage_layer.setdefault(sid, layer)
-        elif kind == "SparkListenerTaskEnd":
-            layer = stage_layer.get(ev.get("Stage ID"))
-            tm = ev.get("Task Metrics")
-            if layer is None or not tm:
-                continue
-            acc = out[layer]
-            acc.run_s += tm.get("Executor Run Time", 0) / 1e3
-            acc.cpu_s += tm.get("Executor CPU Time", 0) / 1e9
-            acc.gc_s += tm.get("JVM GC Time", 0) / 1e3
-            sr = tm.get("Shuffle Read Metrics", {})
-            acc.shuffle_read_mb += (
-                sr.get("Remote Bytes Read", 0) + sr.get("Local Bytes Read", 0)
-            ) / MB
-            sw = tm.get("Shuffle Write Metrics", {})
-            acc.shuffle_write_mb += sw.get("Shuffle Bytes Written", 0) / MB
-            acc.spill_mb += (
-                tm.get("Memory Bytes Spilled", 0) + tm.get("Disk Bytes Spilled", 0)
-            ) / MB
-            for a in (ev.get("Task Info") or {}).get("Accumulables", []):
-                name, upd = a.get("Name"), a.get("Update")
-                if upd is None:
+    with open(path) as f:
+        for line in f:
+            ev = json.loads(line)
+            kind = ev.get("Event")
+            if kind == "SparkListenerJobStart":
+                group = (ev.get("Properties") or {}).get("spark.jobGroup.id")
+                layer = group if group in layers else _innermost(
+                    spans, ev.get("Submission Time", 0) / 1000.0
+                )
+                if layer is None:
                     continue
-                if name == _PY_RUN:
-                    acc.python_s += float(upd) / 1e3
-                elif name == _PY_SENT:
-                    acc.python_sent_mb += float(upd) / MB
+                out[layer].jobs += 1
+                for sid in ev.get("Stage IDs", []):
+                    stage_layer.setdefault(sid, layer)
+            elif kind == "SparkListenerTaskEnd":
+                layer = stage_layer.get(ev.get("Stage ID"))
+                tm = ev.get("Task Metrics")
+                if layer is None or not tm:
+                    continue
+                acc = out[layer]
+                acc.run_s += tm.get("Executor Run Time", 0) / 1e3
+                acc.cpu_s += tm.get("Executor CPU Time", 0) / 1e9
+                acc.gc_s += tm.get("JVM GC Time", 0) / 1e3
+                sr = tm.get("Shuffle Read Metrics", {})
+                acc.shuffle_read_mb += (
+                    sr.get("Remote Bytes Read", 0) + sr.get("Local Bytes Read", 0)
+                ) / MB
+                sw = tm.get("Shuffle Write Metrics", {})
+                acc.shuffle_write_mb += sw.get("Shuffle Bytes Written", 0) / MB
+                acc.spill_mb += (
+                    tm.get("Memory Bytes Spilled", 0) + tm.get("Disk Bytes Spilled", 0)
+                ) / MB
+                for a in (ev.get("Task Info") or {}).get("Accumulables", []):
+                    name, upd = a.get("Name"), a.get("Update")
+                    if upd is None:
+                        continue
+                    if name == _PY_RUN:
+                        acc.python_s += float(upd) / 1e3
+                    elif name == _PY_SENT:
+                        acc.python_sent_mb += float(upd) / MB
     return out
-
-
-def _event_lines(path: str):
-    """Lines of a single-file event log, or of every ``events_<n>_*`` part
-    of a rolling one, in order."""
-    if os.path.isdir(path):
-        parts = sorted(
-            (f for f in os.listdir(path) if f.startswith("events_")),
-            key=lambda f: int(f.split("_")[1]),
-        )
-        files = [os.path.join(path, f) for f in parts]
-    else:
-        files = [path]
-    for fn in files:
-        with open(fn) as f:
-            yield from f
 
 
 def event_log_file(log_dir: str) -> str:

@@ -11,6 +11,7 @@ from __future__ import annotations
 import hashlib
 import os
 import random
+import statistics
 import sys
 import time
 import traceback
@@ -45,16 +46,11 @@ from tracing import Tracer, wrapped_methods
 class Workload:
     n_turns: int
     family_scale: int | None = None  # None: the generator's default
-    # extra passes of the traced run, split between the workloads so that
-    # each traced run stays well inside the per-run time limit:
-    traced_attach: bool = False  # stream day-2 increments against half of
-    # the input's distinct forms
-    traced_durable: bool = False  # resolve fresh and resumed in workdir mode
 
 
 WORKLOADS = {
-    "er_mentions": Workload(n_turns=200_000, traced_attach=True),
-    "er_pairs": Workload(n_turns=20_000, family_scale=24, traced_durable=True),
+    "er_mentions": Workload(n_turns=100_000),
+    "er_pairs": Workload(n_turns=10_000, family_scale=24),
 }
 INCREMENT = 320  # mentions per streamed increment
 INCREMENTS = 5  # increments streamed in the traced run
@@ -71,8 +67,11 @@ ER_LAYERS = (
 )
 
 
+_T0 = time.perf_counter()
+
+
 def log(msg: str) -> None:
-    print(f"[erbench] {msg}", file=sys.stderr, flush=True)
+    print(f"[erbench +{time.perf_counter() - _T0:.1f}s] {msg}", file=sys.stderr, flush=True)
 
 
 def write_transcripts(spark: SparkSession, wl: Workload, seed: int, path: str) -> DataFrame:
@@ -146,14 +145,15 @@ def resolve(spark: SparkSession, transcripts: DataFrame, config: PipelineConfig 
 
 
 def run_er(spark, transcripts, seconds: float, pin) -> dict:
-    """Resolve ``transcripts`` until ``seconds`` have passed (at least once).
-    ``walls`` holds the resolutions that passed their checks, ``op_s``
-    every attempt's wall time, ``failures`` one list of messages per
-    failed attempt."""
+    """Resolve ``transcripts`` at least once, and again while the median
+    attempt so far still fits in what is left of ``seconds``. ``walls``
+    holds the resolutions that passed their checks, ``op_s`` every
+    attempt's wall time, ``failures`` one list of messages per failed
+    attempt."""
     walls, cpus, op_s, failures, last = [], [], [], [], None
     attempted = 0
     t0 = time.perf_counter()
-    while attempted == 0 or time.perf_counter() - t0 < seconds:
+    while attempted == 0 or time.perf_counter() - t0 + statistics.median(op_s) <= seconds:
         attempted += 1
         t_op = time.perf_counter()
         try:
@@ -177,10 +177,17 @@ def run_er(spark, transcripts, seconds: float, pin) -> dict:
             "failures": failures, "last": last}
 
 
-def shape_of(wl: Workload, conversations: int, pairs: int | None, capped: int | None, out: dict) -> dict:
-    """The shape of a resolved input. Candidate pairs and capped blocks are
-    counted by the traced run's blocking layer; a timed run leaves them
-    out rather than spend a second blocking pass on them."""
+def count_blocking(vertices: DataFrame) -> tuple[int, int]:
+    """Candidate pairs and capped blocks of ``vertices``, counted outside
+    the timed region by running the blocking layer again."""
+    cfg = PipelineConfig()
+    blocks = build_blocks(vertices, n_hashes=cfg.minhash_hashes, bands=cfg.minhash_bands)
+    pairs, capped = candidate_pairs(blocks, max_block_size=cfg.max_block_size)
+    return pairs.count(), capped.count()
+
+
+def shape_of(wl: Workload, conversations: int, pairs: int, capped: int, out: dict) -> dict:
+    """The shape of a resolved input."""
     return {
         "turns": wl.n_turns,
         "family_scale": wl.family_scale,
@@ -215,7 +222,8 @@ def resolve_staged(spark, tracer: Tracer, transcripts: DataFrame, cfg: PipelineC
         blocks = build_blocks(vertices, n_hashes=cfg.minhash_hashes, bands=cfg.minhash_bands)
         pairs, capped = candidate_pairs(blocks, max_block_size=cfg.max_block_size)
         pairs = _force(pairs)
-        extra["capped_blocks"] = capped.count()
+    # the pipeline does not count capped blocks unless it writes lineage
+    extra["capped_blocks"] = capped.count()
     rows["blocking"] = pairs.count()
     with tracer.span("scoring"):
         edges = _force(matched_edges(score_pairs(pairs, cfg.scoring)))

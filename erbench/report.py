@@ -79,29 +79,31 @@ def per_layer_names() -> list[tuple[str, str, str]]:
 
 
 def run_workload(W, spark, wl, args, tmp: str, setup: list[float]) -> dict:
-    """Generate the input and resolve it once untimed (the first full-size
-    resolution in a JVM runs slower; it is checked and counted, not timed).
-    Timed: resolve the input repeatedly for ``--seconds``. Traced: one
-    resolution through the pipeline, then the staged layer-by-layer
-    resolution, the durable fresh and resumed resolutions, and the day-2
-    attach stream."""
+    """Generate the input and resolve it. Timed: resolve for ``--seconds``,
+    starting with the session's first resolution. Traced: one untimed
+    resolution (the first in a session runs about twice as long), one
+    through the pipeline, then the staged layer-by-layer resolution, the
+    durable fresh and resumed resolutions, and the day-2 attach stream."""
     pin = pinned(args.workload, args.seed)
     transcripts = W.write_transcripts(spark, wl, args.seed, os.path.join(tmp, "transcripts"))
     W.log("input written")
-    first = W.run_er(spark, transcripts, 0, pin)
-    timed = W.run_er(spark, transcripts, 0 if args.trace else args.seconds, pin)
-    timed["attempted"] += first["attempted"]
-    timed["failures"] += first["failures"]
-    run = {"er": timed, "first_s": first["op_s"][0], "setup": setup, "shape": None, "outputs": None,
-           "trace_failures": []}
-    if timed["last"] is not None:
-        run["outputs"] = timed["last"][1]
+    run = {"setup": setup, "shape": None, "outputs": None, "trace_failures": []}
     if not args.trace:
-        if timed["last"] is not None:
-            r, out = timed["last"]
+        er = run["er"] = W.run_er(spark, transcripts, args.seconds, pin)
+        if er["last"] is not None:
+            r, out = er["last"]
+            run["outputs"] = out
             run["shape"] = W.shape_of(wl, r.conversations.count(), *W.count_blocking(r.vertices), out)
             W.log("input shape counted")
         return run
+
+    first = W.run_er(spark, transcripts, 0, pin)
+    er = run["er"] = W.run_er(spark, transcripts, 0, pin)
+    er["attempted"] += first["attempted"]
+    er["failures"] += first["failures"]
+    run["first_s"] = first["op_s"][0]
+    if er["last"] is not None:
+        run["outputs"] = er["last"][1]
 
     from neuronews_spark.pipeline import PipelineConfig
     from neuronews_spark.sources.tables import ParquetCatalog
@@ -170,7 +172,7 @@ def finish(W, wl, args, run: dict, nproc: int, tmp: str) -> tuple[dict, dict]:
     record = {
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
         "trace": args.trace, "shape": run["shape"], "outputs": run["outputs"],
-        "setup_s": run["setup"], "first_resolution_s": run["first_s"],
+        "setup_s": run["setup"], "first_resolution_s": run.get("first_s"),
         "resolution_s": walls, "resolution_cpu_s": er["cpus"], "resolution_tail": tail(walls),
     }
     if args.trace:

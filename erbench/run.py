@@ -1,6 +1,6 @@
 """Entity-resolution benchmark: one workload, one JVM, one JSON result.
 
-    python3 erbench/run.py --workload er_mentions --seed 1 --seconds 25 --trace 0
+    python3 erbench/run.py --workload er_mentions --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout of the repository. The last line of
 standard output is the result; the line before it is a record of the
@@ -33,7 +33,7 @@ JIFFIES_AT_START = cpu_jiffies()
 ROOT = os.getcwd()
 HERE = os.path.dirname(os.path.abspath(__file__))
 DRIVER_MEM = "3g"
-SETUP_SAMPLES = 3  # set-ups per timed run (the traced run sets up once)
+SETUP_SAMPLES = 2  # set-ups per timed run (the traced run sets up once)
 WARM_ROWS = 1000
 
 
@@ -210,8 +210,8 @@ def main() -> int:
         return 2
     spark = None
     # set-up: process start to a warm session. A timed run makes
-    # SETUP_SAMPLES set-ups at once, this process's and the samples'; three
-    # one after another would cost a third of the run's time budget.
+    # SETUP_SAMPLES set-ups at once, this process's and the samples'; one
+    # after another they would cost about a fifth of the run's time.
     samples = [] if args.trace else start_setup_samples(tmp, SETUP_SAMPLES - 1)
     try:
         spark = start_session(tmp, trace=bool(args.trace))
